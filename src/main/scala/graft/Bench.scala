@@ -192,48 +192,9 @@ object Bench {
       headlineR14 ++ headlineR14b ++ headlineR14c ++ headlineR15 ++
       headlineR15b
 
-  /** 1/5/15-minute load averages as a JSON array ("[]" off-Linux). */
-  private def loadavg(): String =
-    try {
-      val f = scala.io.Source.fromFile("/proc/loadavg")
-      val parts = try f.mkString.trim.split(" ") finally f.close()
-      s"[${parts(0)},${parts(1)},${parts(2)}]"
-    } catch { case _: Throwable => "[]" }
-
-  /** -1.0 = this run FAILED (sentinel — never a plausible elapsed time;
-    * recording time-to-failure would launder an OOM into a benchmark
-    * number). Aggregations skip sentinels.
-    */
-  private def runOnce(f: => Unit, label: String): Double = {
-    val t0 = System.nanoTime()
-    try { f; (System.nanoTime() - t0) / 1e9 }
-    catch {
-      case e: Throwable => System.err.println(s"[bench] $label: $e"); -1.0
-    }
-  }
-
-  /** Two runs (run 1 keeps the cold-plan property; run 2 is a full
-    * recompute — no operator uses persist/cache, localCheckpoints are
-    * fresh blocks per invocation). Returns (best, raw runs): best = min
-    * of the SUCCESSFUL runs, or -1.0 if both failed.
-    */
-  private def timedRuns(f: => Unit, label: String): (Double, Seq[Double]) = {
-    val runs = Seq(runOnce(f, label), runOnce(f, label))
-    val ok = runs.filter(_ >= 0)
-    (if (ok.nonEmpty) ok.min else -1.0, runs)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tools.local("32")
 
     // Self-defense against a contended host: two rounds running, the
     // driver's bench artifact was taken at 1-min load 16+ and every
@@ -246,20 +207,17 @@ object Bench {
     // a briefly-quiet host is not a quiet host.
     val deferLimit =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_DEFER_SEC", "900").toInt
-    def load15(): (Double, Double) =
-      try {
-        val f = scala.io.Source.fromFile("/proc/loadavg")
-        try {
-          val p = f.mkString.trim.split(" ")
-          (p(0).toDouble, p(1).toDouble)
-        } finally f.close()
-      } catch { case _: Throwable => (0.0, 0.0) }
-    def hot(): Boolean = { val (l1, l5) = load15(); l1 >= 3.0 || l5 >= 5.0 }
+    def hot(): Boolean = Tools.loadavg().map(_.toDouble) match {
+      case Seq(l1, l5, _) => l1 >= 3.0 || l5 >= 5.0
+      case _ => false
+    }
     val deferT0 = System.nanoTime()
     while (hot() && (System.nanoTime() - deferT0) / 1e9 < deferLimit)
       Thread.sleep(5000)
     val deferSec = (System.nanoTime() - deferT0) / 1e9
 
+    // 1/5/15-minute load averages as a JSON array ("[]" off-Linux)
+    def loadavg(): String = Tools.loadavg().mkString("[", ",", "]")
     val loadBefore = loadavg()
 
     // Warm the session (codegen, parquet footer cache, JIT) outside the
@@ -275,7 +233,7 @@ object Bench {
 
     val results = headline.flatMap { name =>
       SparkEntry.queries.get(name).map { fn =>
-        val (best, runs) = timedRuns(fn(spark, sfDir).count(), name)
+        val (best, runs) = Tools.best2(name)(fn(spark, sfDir).count())
         (name, best, runs)
       }
     }
@@ -283,8 +241,7 @@ object Bench {
     // 2000-char output-tail window (r6's full-precision line overflowed
     // it and the driver recorded parsed:null); the full-precision
     // per-run times go out on their own earlier line for forensics.
-    def r3(v: Double): String =
-      if (v < 0) "-1.0" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+    import Tools.r3
     // The total line keys queries by their qNN id alone (unique by
     // construction; the `runs` forensics line keeps full names). The
     // r10 line was ~1.72 kB against the same 2000-char cut — three more
@@ -347,33 +304,33 @@ object Bench {
       .localCheckpoint()
     val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val plainJoin = timedRuns({
+    val plainJoin = Tools.best2("skew_join_plain") {
       li.join(dim, "k")
         .groupBy("p_brand")
         .agg(count(lit(1)), sum("l_quantity")).count()
-    }, "skew_join_plain")._1
-    val saltedJoin = timedRuns({
+    }._1
+    val saltedJoin = Tools.best2("skew_join_salted") {
       graft.operators.Joins.saltedJoin(li, dim, "k", saltFactor = 32)
         .groupBy("p_brand")
         .agg(count(lit(1)), sum("l_quantity")).count()
-    }, "skew_join_salted")._1
+    }._1
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
     // top-3 rows per key: per-group window sort (q68's shape) vs the
     // bounded typed Aggregator (q104's shape) on the same skewed key
     val win = org.apache.spark.sql.expressions.Window
       .partitionBy("k")
       .orderBy(col("l_extendedprice").desc, col("l_orderkey").asc)
-    val windowTopK = timedRuns({
+    val windowTopK = Tools.best2("skew_topk_window") {
       li.withColumn("rn", row_number().over(win))
         .filter(col("rn") <= 3).count()
-    }, "skew_topk_window")._1
-    val aggTopK = timedRuns({
+    }._1
+    val aggTopK = Tools.best2("skew_topk_agg") {
       val topk = udaf(new graft.operators.TopKTermsAggregator(3))
       li.groupBy("k")
         .agg(topk(col("l_orderkey").cast("string"), col("l_quantity").cast("long"),
           col("l_extendedprice")).as("top"))
         .select(col("k"), posexplode(col("top"))).count()
-    }, "skew_topk_agg")._1
+    }._1
     Seq(
       "skew_join_plain" -> plainJoin,
       "skew_join_salted" -> saltedJoin,

@@ -1525,7 +1525,7 @@ object Corpus {
     * pass — per-document arithmetic only, no explode, no shuffle,
     * embarrassingly parallel over the scan's own partitioning (the
     * measured 13.9× tagger win over the explode/groupBy relational
-    * form, BenchScalars). Tokenization matches
+    * form, `Probe scalars`). Tokenization matches
     * [[TextFunctions.tokens]]; symbol hits count `#` characters plus
     * NON-overlapping left-to-right `...` occurrences (the `replace`
     * counting rule both engines share).

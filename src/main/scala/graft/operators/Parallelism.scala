@@ -64,27 +64,46 @@ private[operators] object Parallelism {
     * (a handful of thunks, called a handful of times per operation),
     * so pool construction is noise and nothing leaks between callers.
     * Threads are created at submit time and inherit the caller's
-    * SparkContext local properties (job group/description). The first
-    * failure propagates with its ORIGINAL exception (operators throw
-    * typed errors the specs assert on), after every thunk settles.
+    * SparkContext local properties (job group/description); each
+    * thunk's jobs also carry a tag of their own. The FIRST failure
+    * (any Throwable, in completion order) cancels the jobs its
+    * siblings are running, and propagates with its ORIGINAL exception
+    * (operators throw typed errors the specs assert on) after every
+    * thunk settles — nothing keeps writing behind a failed call. An
+    * interrupt of the waiting caller cancels every thunk's jobs and
+    * returns at once, with the thread's interrupt flag set again.
     */
   private[operators] def inParallel[A](thunks: (() => A)*): Seq[A] = {
+    import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors}
     require(thunks.nonEmpty, "inParallel needs at least one thunk")
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
+    // the context the thunks' jobs run on (one per JVM)
+    val sc = org.apache.spark.SparkContext.getOrCreate()
+    val tags = thunks.map(_ => s"graft-inParallel-${java.util.UUID.randomUUID()}")
+    val pool = Executors.newFixedThreadPool(thunks.size)
     try {
-      val futs = thunks.map(t =>
-        pool.submit(new java.util.concurrent.Callable[A] {
-          def call(): A = t()
-        }))
-      val results = futs.map { f =>
-        try Right(f.get())
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            Left(Option(e.getCause).getOrElse(e))
+      val done = new ExecutorCompletionService[A](pool)
+      val futs = thunks.zip(tags).map { case (t, tag) =>
+        done.submit(() => { sc.addJobTag(tag); t() })
+      }
+      var failure: Option[Throwable] = None
+      var waiting = futs.size
+      while (waiting > 0) {
+        waiting -= 1
+        val err =
+          try { done.take().get(); None }
+          catch {
+            case e: ExecutionException => Some(Option(e.getCause).getOrElse(e))
+            case e: InterruptedException =>
+              Thread.currentThread().interrupt(); waiting = 0; Some(e)
+            case e: Throwable => Some(e)
+          }
+        if (failure.isEmpty && err.isDefined) {
+          failure = err
+          tags.foreach(sc.cancelJobsWithTag(_, "an inParallel thunk failed"))
         }
       }
-      results.collectFirst { case Left(e) => throw e }
-      results.collect { case Right(a) => a }
+      failure.foreach(throw _)
+      futs.map(_.get())
     } finally pool.shutdown()
   }
 }

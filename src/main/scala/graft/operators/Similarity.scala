@@ -640,7 +640,7 @@ object Similarity {
   /** Per-subspace codebook: (cid, centroid, ||centroid||²). Missing cids
     * (emptied clusters) simply drop out, as in [[kmeansAssign]].
     */
-  private type Codebook = Array[(Long, Array[Double], Double)]
+  private[graft] type Codebook = Array[(Long, Array[Double], Double)]
 
   /** Internal: base projection with per-subspace slices `sub_s` and
     * squared norms `nv_s` (computed once, checkpointed — every training
@@ -674,7 +674,7 @@ object Similarity {
     * Runs as ONE native expression (l2_argmin_native) holding the whole
     * codebook — the literal struct-max form ([[pqAssignLit]]) is
     * semantically identical but inlines m·ksub struct/round/dot nodes
-    * into a single projection, and BenchFunnel measured its ANALYSIS +
+    * into a single projection, and `Probe funnel` measured its ANALYSIS +
     * CODEGEN cost dominating the composed funnel (pqEncode ≈8 s on
     * 2 000 rows, nearly all plan compilation). DedupSpec pins the two
     * paths equal row-for-row on fixed books.
@@ -807,7 +807,7 @@ object Similarity {
     * slot that no code can reference. References `qnv$s`/`qsub$s` on
     * the query side and `a$s` codes on the corpus side.
     */
-  private def adcTerms(books: Array[Codebook], m: Int, ksub: Int,
+  private[graft] def adcTerms(books: Array[Codebook], m: Int, ksub: Int,
                        dsub: Int): Seq[Column] = {
     def ceTable(s: Int): Seq[Seq[Double]] = {
       val t = Array.fill(ksub)(Seq.fill(dsub)(0.0))
@@ -836,7 +836,7 @@ object Similarity {
     * driver-held table riding `references[]`, so the scoring
     * projection's generated code is also m× smaller.
     */
-  private def adcSum(books: Array[Codebook], m: Int, ksub: Int,
+  private[graft] def adcSum(books: Array[Codebook], m: Int, ksub: Int,
                      dsub: Int): Column = {
     val ce: Seq[Seq[Seq[Double]]] = (0 until m).map { s =>
       val t = Array.fill(ksub)(Seq.fill(dsub)(0.0))
@@ -980,7 +980,7 @@ object Similarity {
     * re-rank), so the DuckDB oracle replays the full funnel stage by
     * stage (q128).
     *
-    * Defaults are MEASURED, not guessed (BenchRecall's sweep, published
+    * Defaults are MEASURED, not guessed (`Probe recall`'s sweep, published
     * in BASELINE.md): on the gaussian worst case — random vectors give
     * the coarse quantizer almost no locality signal — (nCells=16,
     * nProbe=12, shortlist=256) is the cheapest sweep point clearing
@@ -1138,11 +1138,13 @@ object Similarity {
         codes.repartitionByRange(math.max(1, math.min(nCells, 32)),
           col("cell")).sortWithinPartitions("cell")
       else codes
-    // Four INDEPENDENT snapshot tables (distinct dirs, no cross-table
-    // atomicity contract — the maintenance cycle is single-writer, and
-    // the sequential form never had a multi-table commit either):
-    // publish them as concurrent jobs (guide §2.6), so the phase pays
-    // the slowest write + stats pass, not the sum of four.
+    // The three artifact tables are INDEPENDENT (distinct dirs): publish
+    // them as concurrent jobs (guide §2.6), so the phase pays the
+    // slowest write + stats pass, not the sum of three. `meta` — the
+    // knobs and attr contract every reader starts from — is written
+    // only after all three succeed: a failed build or optimize leaves
+    // readers on the previous contract, never on one whose codes
+    // table was not written.
     Parallelism.inParallel[Long](
       () => Layout.snapshotWrite(cent, s"$indexDir/centroids"),
       () => Layout.snapshotWrite(
@@ -1151,11 +1153,11 @@ object Similarity {
         }.toSeq.toDF("s", "cid", "ce"),
         s"$indexDir/codebooks"),
       () => Layout.snapshotWrite(codesOut, s"$indexDir/codes",
-        statsCols = "cell" +: attrCols),
-      () => Layout.snapshotWrite(
-        Seq((nCells, m, ksub, dim, attrCols.mkString(",")))
-          .toDF("n_cells", "m", "ksub", "dim", "attrs"),
-        s"$indexDir/meta"))
+        statsCols = "cell" +: attrCols))
+    Layout.snapshotWrite(
+      Seq((nCells, m, ksub, dim, attrCols.mkString(",")))
+        .toDF("n_cells", "m", "ksub", "dim", "attrs"),
+      s"$indexDir/meta")
     ()
   }
 

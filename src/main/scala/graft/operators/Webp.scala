@@ -48,11 +48,6 @@ object Webp {
     private val out = new java.io.ByteArrayOutputStream()
     private var cur = 0
     private var nb = 0
-    def writeBit(b: Int): Unit = {
-      cur |= (b & 1) << nb
-      nb += 1
-      if (nb == 8) { out.write(cur); cur = 0; nb = 0 }
-    }
     /** n natural bits, LSB first (the spec's ReadBits inverse).
       * Buffered: the bit-at-a-time loop paid a call + branch PER BIT
       * of every emitted code — the encoder's hottest path; this folds

@@ -678,7 +678,7 @@ case class DotProductExpression(left: Expression, right: Expression)
   * HOF form (`transform(sequence(...), aggregate(sequence(...), ...))`)
   * is CodegenFallback: TWO nested interpreted lambda evals per packed
   * bit plus a materialized index array per block. This compiles to one
-  * JIT-ed while-loop inside whole-stage codegen (BenchScalars measures
+  * JIT-ed while-loop inside whole-stage codegen (`Probe scalars` measures
   * the gap).
   */
 case class BinaryQuantizeExpression(child: Expression) extends UnaryExpression {
@@ -714,7 +714,7 @@ case class BinaryQuantizeExpression(child: Expression) extends UnaryExpression {
   * native codegen expression: one xor+popcount while-loop replacing the
   * interpreted `aggregate(zip_with(...))` HOF — the inner kernel of
   * binary-code search, where per-element interpreted dispatch costs 4×+
-  * (BenchScalars).
+  * (`Probe scalars`).
   */
 case class HammingDistanceExpression(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -904,7 +904,7 @@ case class CosineArgmaxExpression(emb: Expression, norm: Expression,
   * assignment. The literal path (ksub inline struct/round/dot
   * expressions PER SUBSPACE — m·ksub struct nodes in one projection)
   * is correct but its analysis + codegen cost dominates small-input
-  * runs: BenchFunnel measured pqEncode at ~8 s on 2 000 rows, nearly
+  * runs: `Probe funnel` measured pqEncode at ~8 s on 2 000 rows, nearly
   * all of it plan compilation. One kernel call per subspace collapses
   * the tree to O(m).
   */
@@ -1144,8 +1144,10 @@ case class LogisticScoreExpression(weights: Expression,
   * is bit-identical (DedupSpec pins it). Null semantics mirror the
   * literal form: a dim-mismatched codebook slice or a null sub-vector
   * element nulls the SUM (dot_native's null propagated through Add).
-  * An out-of-range code fails loudly (the literal path's ANSI
-  * element_at would too).
+  * Codes are read back from index tables on disk, so each is
+  * bounds-checked like the literal form's `element_at`: an
+  * out-of-range code nulls the sum with ANSI off (`failOnError`
+  * false) and raises INVALID_ARRAY_INDEX_IN_ELEMENT_AT with ANSI on.
   *
   * Why a kernel: the literal form inlines m×(2 element_at over nested
   * array literals + a dot call + adds) per CANDIDATE PAIR — the inner
@@ -1154,7 +1156,7 @@ case class LogisticScoreExpression(weights: Expression,
   * shrinks the scoring projection's codegen.
   */
 final class AdcSumKernel(ce: Array[Array[Array[Double]]],
-    nc: Array[Array[Double]]) extends Serializable {
+    nc: Array[Array[Double]], failOnError: Boolean) extends Serializable {
 
   def apply(codes: Array[Long],
             qsubs: Array[org.apache.spark.sql.catalyst.util.ArrayData],
@@ -1162,7 +1164,14 @@ final class AdcSumKernel(ce: Array[Array[Array[Double]]],
     var acc = 0.0
     var s = 0
     while (s < codes.length) {
-      val c = codes(s).toInt
+      val code = codes(s)
+      if (code < 0 || code >= ce(s).length) {
+        if (failOnError)
+          throw org.apache.spark.sql.graft.Bridge.elementAtIndexError(
+            (code + 1).toInt, ce(s).length)
+        return null
+      }
+      val c = code.toInt
       val cev = ce(s)(c)
       val q = qsubs(s)
       if (q.numElements() != cev.length) return null
@@ -1186,10 +1195,14 @@ final class AdcSumKernel(ce: Array[Array[Array[Double]]],
   * nc: array<array<double>>), then the m corpus codes (bigint), the m
   * query sub-vectors (array<double>) and the m query squared norms
   * (double). NULL in any data child yields NULL, matching the literal
-  * form's propagation.
+  * form's propagation. `failOnError` is the session's ANSI mode when
+  * the expression is built, as for `element_at`.
   */
 case class AdcSumExpression(ceLit: Expression, ncLit: Expression,
-    data: Seq[Expression]) extends Expression {
+    data: Seq[Expression],
+    failOnError: Boolean =
+      org.apache.spark.sql.internal.SQLConf.get.ansiEnabled)
+    extends Expression {
 
   import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
   override def children: Seq[Expression] = ceLit +: ncLit +: data
@@ -1231,7 +1244,7 @@ case class AdcSumExpression(ceLit: Expression, ncLit: Expression,
       .map(_.asInstanceOf[ArrayData].toDoubleArray())
     require(ce.length == m && nc.length == m,
       s"lookup tables for ${ce.length}/${nc.length} subspaces, need $m")
-    new AdcSumKernel(ce, nc)
+    new AdcSumKernel(ce, nc, failOnError)
   }
 
   override def eval(input: InternalRow): Any = {

@@ -508,7 +508,7 @@ object Events {
     // the variant path is parse-once/extract-many, which is the shape a
     // metadata-heavy pipeline wants when each document carries a bag of
     // crawl/source/license fields read by many downstream filters
-    // (BenchScalars measures the gap). The two-step select keeps the
+    // (`Probe scalars` measures the gap). The two-step select keeps the
     // parse in its own projection (CollapseProject won't inline an
     // expression referenced more than once, so the parse stays single);
     // a missing path extracts as NULL, and the int and string reads

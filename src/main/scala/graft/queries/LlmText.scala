@@ -1205,7 +1205,7 @@ object LlmText {
     // ColBERT MaxSim late-interaction retrieval (q310): vec_id // 5
     // plays the chunk→doc mapping — the SIZED shape (r14 re-pin per
     // the r13 verdict): doc count tracks the corpus and chunks/doc
-    // stays fixed at 5, which is the production contract (BenchScale
+    // stays fixed at 5, which is the production contract (`Probe scale`
     // measured the old %100 fixture — chunks/doc ∝ N — harness-
     // quadratic while this shape is linear). Since r12 maxSimTopK IS
     // the two-stage PER-CHUNK funnel (each query chunk nominates the
@@ -2136,7 +2136,7 @@ object LlmText {
           "binary_prefilter"))
         .unionByName(row(Similarity.binaryPrefilterTopK(e, 3, shortlist = 320),
           "binary_prefilter_320"))
-        // r8: the measured defaults (BenchRecall sweep) — the old
+        // r8: the measured defaults (`Probe recall` sweep) — the old
         // nProbe=4/8 shortlist=64 point read 0.64 recall
         .unionByName(row(Similarity.ivfAdcRerankTopK(e, 3, nCells = 16,
           nProbe = 12, shortlist = 256), "ivf_adc_rerank"))

@@ -16,6 +16,14 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** The error ANSI `element_at` raises for an out-of-range 1-based
+    * `index` (INVALID_ARRAY_INDEX_IN_ELEMENT_AT), for native kernels
+    * that mirror its lookups.
+    */
+  def elementAtIndexError(index: Int, numElements: Int): Throwable =
+    org.apache.spark.sql.errors.QueryExecutionErrors
+      .invalidElementAtIndexError(index, numElements, null)
+
   /** LogicalPlan → DataFrame for command implementations (classic
     * `Dataset.ofRows` is private[sql]).
     */

@@ -299,6 +299,48 @@ class DedupSpec extends AnyFunSuite {
     assert(run(useLit = false) == run(useLit = true))
   }
 
+  test("ADC distance: an out-of-range code behaves like the literal element_at form, ANSI off and on") {
+    import spark.implicits._
+    graft.plans.NativeFunctions.register(spark)
+    val (m, ksub) = (2, 4)
+    val books: Array[Similarity.Codebook] = Array.tabulate(m) { s =>
+      Array.tabulate(ksub) { c =>
+        val ce = Array(c + 0.5 * s, 1.0 - c)
+        (c.toLong, ce, ce.map(x => x * x).sum)
+      }
+    }
+    // codes as read back from a corrupt index table: 4 is past ksub
+    val rows = Seq((0L, 1L), (3L, 2L), (4L, 0L)).toDF("a0", "a1")
+      .withColumn("qsub0", array(lit(0.5), lit(-1.0)))
+      .withColumn("qsub1", array(lit(2.0), lit(0.25)))
+      .withColumn("qnv0", lit(1.25))
+      .withColumn("qnv1", lit(4.0625))
+      .localCheckpoint()
+    def dist(kernel: Boolean) =
+      if (kernel) Similarity.adcSum(books, m, ksub, 2)
+      else Similarity.adcTerms(books, m, ksub, 2).reduce(_ + _)
+    def run(kernel: Boolean, ansi: Boolean): Either[String, Seq[Option[Long]]] = {
+      val saved = spark.conf.get("spark.sql.ansi.enabled")
+      spark.conf.set("spark.sql.ansi.enabled", ansi.toString)
+      try Right(rows.select(dist(kernel)).collect().toSeq.map(r =>
+        if (r.isNullAt(0)) None
+        else Some(java.lang.Double.doubleToLongBits(r.getDouble(0)))))
+      catch {
+        case e: Exception =>
+          Left(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .collectFirst { case t: org.apache.spark.SparkThrowable
+              if t.getCondition != null => t.getCondition }
+            .getOrElse(e.toString))
+      } finally spark.conf.set("spark.sql.ansi.enabled", saved)
+    }
+    val off = run(kernel = true, ansi = false)
+    assert(off == run(kernel = false, ansi = false))
+    assert(off.exists(r => r.take(2).forall(_.isDefined) && r(2).isEmpty), off)
+    val on = run(kernel = true, ansi = true)
+    assert(on == run(kernel = false, ansi = true))
+    assert(on == Left("INVALID_ARRAY_INDEX_IN_ELEMENT_AT"), on)
+  }
+
   test("redact replaces URLs and emails with placeholder tags") {
     import spark.implicits._
     import graft.functions.TextFunctions
@@ -425,6 +467,46 @@ class DedupSpec extends AnyFunSuite {
       case Seq((_, hi), (lo, _)) => hi <= lo
       case _ => true
     }, s"overlapping cell ranges across files: $ranges")
+  }
+
+  test("IVF rebuild failing in the codes write leaves meta and its readers on the old contract") {
+    import spark.implicits._
+    import graft.operators.Layout
+    val dirs = Seq(
+      Array(1f, 0f, 0f, 0f, 1f, 0f, 0f, 0f),
+      Array(0f, 1f, 0f, 0f, 0f, 1f, 0f, 0f),
+      Array(0f, 0f, 1f, 0f, 0f, 0f, 1f, 0f))
+    def mk(ids: Range) = ids.map(i =>
+      (i.toLong, dirs(i % 3).map(x => x * (1f + 0.01f * (i / 3)))))
+      .toDF("id", "embedding")
+    // checkpointed, not a local relation: the optimizer would evaluate
+    // a projection over literal rows while planning the first job
+    val vecs = mk(0 until 6).localCheckpoint()
+    val idx = java.nio.file.Files.createTempDirectory("graft_ivfmeta").toString
+    Similarity.ivfAdcBuildIndex(vecs, idx, nCells = 3, m = 2, ksub = 4)
+    val metaIds = Layout.snapshotIds(spark, s"$idx/meta")
+    def search() = Similarity.ivfAdcSearchWith(vecs, idx, 1, nProbe = 1,
+      shortlist = 2).collect().map(_.toSeq).toSet
+    val before = search()
+    // only the codes write projects the attr column, so the rebuild
+    // fails there while the other artifact writes go ahead (per-row,
+    // so the optimizer cannot fold the error into planning)
+    val bad = vecs.withColumn("tag", raise_error(concat(
+      lit("planted codes-write failure at id "), col("id").cast("string")))
+      .cast("string"))
+    val e = intercept[Exception](Similarity.ivfAdcBuildIndex(bad, idx,
+      nCells = 3, m = 2, ksub = 4, attrCols = Seq("tag")))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage)
+        .contains("planted codes-write failure")), e)
+    assert(Layout.snapshotIds(spark, s"$idx/meta") === metaIds)
+    assert(Layout.snapshotRead(spark, s"$idx/meta").select("attrs")
+      .head().getString(0) === "")
+    assert(search() === before)
+    // the attr contract still matches the codes table: a plain
+    // (id, embedding) batch appends
+    Similarity.ivfAdcIndexAppend(mk(6 until 9), idx)
+    assert(Layout.snapshotRead(spark, s"$idx/codes").count() === 9)
   }
 
   test("pqAdcTopK finds each vector's planted near-twin from codes alone") {
